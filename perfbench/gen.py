@@ -2,10 +2,10 @@
 
 Everything the program under test sees is made here from the workload
 seed: the source-code corpus (the BASELINE ``input_hint`` columns plus
-``content_sha``), the append deltas, the events table and the query /
-facet request mixes.  The same seed and generator version give the same
-bytes, so the raw inputs can be cached on disk keyed by both; index
-builds are never cached (they are the code under test).
+``content_sha``), the append delta and the events table.  The same seed
+and generator version give the same bytes, so the raw inputs can be
+cached on disk keyed by both; index builds are never cached (they are
+the code under test).
 
 Corpus vocabulary: a Zipf head of code-like identifiers plus a
 long-tail identifier vocabulary (``v`` + hex) drawn nearly uniformly,
@@ -25,7 +25,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-GEN_VERSION = 1
+GEN_VERSION = 2
 
 LANGS = np.array(["py", "java", "c", "go", "js", "rs"])
 _SYLLABLES = (
@@ -69,7 +69,9 @@ def _list_array(values: np.ndarray, lengths: np.ndarray) -> pa.ListArray:
 
 
 def make_corpus(seed: int, stream: int, first_file: int, n_files: int, cfg: dict) -> pa.Table:
-    """``n_files`` source files numbered from ``first_file``.
+    """``n_files`` source files numbered from ``first_file``, drawn from
+    random stream ``stream`` of the seed (0: the base corpus, 1: the
+    append delta, whose files continue the numbering).
 
     Returns the parquet-ready table (file_id, repo, path, commit, lang,
     content, content_sha) plus the oracle-side ``tokens`` list column

@@ -28,6 +28,7 @@ FACET_KINDS = {
 # name -> (unit, better, span it is measured around, end-to-end metric it should move)
 METRICS = {
     "session.get_spark_s": ("s", "lower", "session.get_spark", "setup_s"),
+    "process.peak_rss_mb": ("MB", "lower", "whole run", "none (memory; not gated)"),
     "postings.build_index_s": ("s", "lower", "postings.build_index", "setup_s (search)"),
     "postings.write_index_s": ("s", "lower", "postings.write_index", "setup_s (search)"),
     "postings.build.jobs": ("count", "lower", "ingest.build", "setup_s (search)"),
@@ -35,9 +36,12 @@ METRICS = {
     "postings.build.shuffle_write_mb": ("MB", "lower", "ingest.build", "setup_s (search)"),
     "postings.build.spill_mb": ("MB", "lower", "ingest.build", "setup_s (search)"),
     "postings.index_mb": ("MB", "lower", "postings.write_index", "setup_s, latency_geomean_ms (search)"),
-    "postings.read_index_ms": ("ms", "lower", "postings.read_index", "setup_s (search)"),
-    "bm25.warm_index_s": ("s", "lower", "bm25.warm_index", "setup_s (search)"),
-    "bm25.term_cache_miss_rate": ("ratio", "lower", "request", "ops_per_s (search)"),
+    "postings.append_to_index_s": ("s", "lower", "postings.append_to_index", "setup_s, latency_geomean_ms (search)"),
+    "postings.append.jobs": ("count", "lower", "postings.append_to_index", "setup_s (search)"),
+    "postings.append.rewrite_bytes_per_delta_byte": ("ratio", "lower", "postings.append_to_index", "setup_s (search)"),
+    "postings.read_index_ms": ("ms", "lower", "postings.read_index", "setup_s, latency_geomean_ms (search)"),
+    "bm25.warm_index_s": ("s", "lower", "bm25.warm_index", "setup_s, latency_geomean_ms (search)"),
+    "bm25.term_cache_miss_rate": ("ratio", "lower", "request", "latency_geomean_ms (search)"),
     "bm25.score_queries_call_ms": ("ms", "lower", "bm25.score_queries", "ops_per_s (search)"),
     "bm25.batch.collect_s": ("s", "lower", "bm25.batch.collect", "ops_per_s (search)"),
     "bm25.batch.tasks": ("count", "lower", "request[batch]", "ops_per_s (search)"),
@@ -74,7 +78,7 @@ def _mean(xs) -> float:
     return sum(xs) / len(xs) if xs else 0.0
 
 
-def per_layer(run, spans, jobs) -> dict[str, float]:
+def per_layer(run, spans, jobs, peak_rss_mb: float) -> dict[str, float]:
     inc = attribute(spans, jobs)
     by_name: dict[str, list] = {}
     for s in spans:
@@ -99,11 +103,14 @@ def per_layer(run, spans, jobs) -> dict[str, float]:
         return _mean(notes.get(key, []))
 
     calls = run.setup_calls
+    append_out_b = total("postings.append_to_index", "output_b")
+    delta_b = sum(notes.get("postings.append.delta_content_bytes", []))
     lookups, misses = sum(notes.get("bm25.term_lookups", [])), sum(notes.get("bm25.term_misses", []))
     r_total = sum(notes.get("bm25.wand_ranges_total", []))
     r_scored = sum(notes.get("bm25.wand_ranges_scored", []))
     m = {
         "session.get_spark_s": calls.get("session.get_spark", 0.0),
+        "process.peak_rss_mb": peak_rss_mb,
         "postings.build_index_s": calls.get("postings.build_index", 0.0),
         "postings.write_index_s": calls.get("postings.write_index", 0.0),
         "postings.build.jobs": float(sum(len(js) for js in jobs_of("ingest.build"))),
@@ -111,6 +118,9 @@ def per_layer(run, spans, jobs) -> dict[str, float]:
         "postings.build.shuffle_write_mb": total("ingest.build", "shuffle_write_b") / MB,
         "postings.build.spill_mb": total("ingest.build", "spill_b") / MB,
         "postings.index_mb": note_mean("postings.index_mb"),
+        "postings.append_to_index_s": calls.get("postings.append_to_index", 0.0),
+        "postings.append.jobs": float(sum(len(js) for js in jobs_of("postings.append_to_index"))),
+        "postings.append.rewrite_bytes_per_delta_byte": append_out_b / delta_b if delta_b else 0.0,
         "postings.read_index_ms": calls.get("postings.read_index", 0.0) * 1e3,
         "bm25.warm_index_s": calls.get("bm25.warm_index", 0.0),
         "bm25.term_cache_miss_rate": misses / lookups if lookups else 0.0,
@@ -130,14 +140,10 @@ def per_layer(run, spans, jobs) -> dict[str, float]:
         "search.tasks_per_request": per_request(SEARCH_KINDS, lambda s, js: sum(j.tasks for j in js)),
         "search.driver_only_ms": per_request(SEARCH_KINDS, lambda s, js: (s.wall - busy_seconds(s, js)) * 1e3),
         "search.scheduler_delay_ms": per_request(SEARCH_KINDS, lambda s, js: sum(j.sched_delay_s for j in js) * 1e3),
-        "request_parser.parse_request_ms": _mean(
-            s.wall * 1e3 for s in by_name.get("request_parser.parse_request", []) if s.request is not None
-        ),
-        "facet_query.run_call_ms": _mean(
-            s.wall * 1e3 for s in by_name.get("facet_query.run", []) if s.request is not None
-        ),
+        "request_parser.parse_request_ms": _mean(s.wall * 1e3 for s in by_name.get("request_parser.parse_request", [])),
+        "facet_query.run_call_ms": _mean(s.wall * 1e3 for s in by_name.get("facet_query.run", [])),
         **{
-            name: _mean(s.wall * 1e3 for s in by_name.get("facet.collect", []) if s.attrs.get("kind") == kind and s.request is not None)
+            name: _mean(s.wall * 1e3 for s in by_name.get("facet.collect", []) if s.attrs.get("kind") == kind)
             for name, kind in FACET_KINDS.items()
         },
         "distinct_count.tipped_bucket_share": note_mean("distinct_count.tipped_bucket_share"),
@@ -148,12 +154,12 @@ def per_layer(run, spans, jobs) -> dict[str, float]:
     return m
 
 
-def overhead(results_dir: str, workload: str, traced_e2e: dict) -> dict | None:
+def overhead(results_dir: str, workload: str, scale: str, traced_e2e: dict) -> dict | None:
     """Tracing overhead: median of the traced runs' end-to-end values
     (this one included) minus the median of the untraced runs' values
-    saved in ``results_dir`` for the same workload."""
+    saved in ``results_dir`` for the same workload and scale."""
     runs = {0: [], 1: [traced_e2e]}
-    for path in glob.glob(os.path.join(results_dir, f"{workload}-s*-t*-*.json")):
+    for path in glob.glob(os.path.join(results_dir, f"{workload}-{scale}-s*-t*-*.json")):
         with open(path) as f:
             r = json.load(f)
         runs[r["trace"]].append(r["end_to_end"])

@@ -1,6 +1,8 @@
-"""Exact oracles and answer checks, computed from the generated inputs
-alone (numpy / pandas, no Spark).
+"""Exact oracles and answer checks.
 
+The oracles (numpy / pandas, no Spark) run in the preparation process
+(``prepare.py``) and turn the generated inputs into compact expected
+answers; the checks run in the benchmark process against those answers.
 Every check returns ``None`` when the answer is right and a short
 reason string when it is wrong; the workload loop counts a wrong answer
 as a failed operation.
@@ -18,6 +20,7 @@ K1, B = 1.2, 0.75  # the engine's BM25 defaults (postings.DEFAULT_K1/B)
 SCORE_TOL = 2e-6  # scores are rounded to 6 dp on both sides
 DISTINCT_REL_TOL = 0.02  # BASELINE: HLL distinct-count error <= 2% vs exact
 MAX_EXPANSIONS = 50  # prefix.DEFAULT_MAX_EXPANSIONS (Lucene's default)
+HOUR, MINUTE = 3600, 60
 
 
 class Bm25Oracle:
@@ -33,10 +36,11 @@ class Bm25Oracle:
         self._flat = tokens.flatten().to_numpy(zero_copy_only=False)
         self.dl = np.diff(self._off).astype(np.float64)
         self.n_docs, self.avgdl = n, float(self.dl.mean())
-        doc_of = np.repeat(np.arange(n), np.diff(self._off))
+        self._doc_of = np.repeat(np.arange(n), np.diff(self._off))
         codes, vocab = pd.factorize(self._flat, sort=True)
+        self._codes = codes.astype(np.int64)
         self.vocab = np.asarray(vocab, dtype=object)
-        pair = codes.astype(np.int64) * n + doc_of
+        pair = self._codes * n + self._doc_of
         uniq, tf = np.unique(pair, return_counts=True)
         term_of, self._doc = np.divmod(uniq, n)
         self._tf = tf.astype(np.float64)
@@ -60,10 +64,12 @@ class Bm25Oracle:
         s, e = self._start[c], self._start[c + 1]
         return self._doc[s:e], self._tf[s:e]
 
-    @property
-    def n_postings(self) -> int:
-        """Sum of document frequencies over the vocabulary."""
-        return int(self._doc.size)
+    def n_postings(self, first_docs: int | None = None) -> int:
+        """Sum of document frequencies over the vocabulary, counting only
+        the first ``first_docs`` documents when given."""
+        if first_docs is None:
+            return int(self._doc.size)
+        return int((self._doc < first_docs).sum())
 
     def _scores(self, terms) -> tuple[np.ndarray, np.ndarray]:
         scores = np.zeros(self.n_docs)
@@ -89,13 +95,14 @@ class Bm25Oracle:
         return self._top(scores, cand, k), dict(zip(self.doc_ids[cand].tolist(), scores[cand].tolist()))
 
     def phrase_topk(self, phrase: list[str], k: int):
-        scores, matched = self._scores(phrase)
-        need = len(set(phrase))
+        scores, _ = self._scores(phrase)
+        m, n = len(phrase), self._codes.size
+        codes = [self._code.get(t, -1) for t in phrase]
+        at = np.ones(max(n - m + 1, 0), dtype=bool)
+        for j, c in enumerate(codes):  # positions where the phrase starts
+            at &= (self._codes[j : n - m + 1 + j] == c) & (self._doc_of[j : n - m + 1 + j] == self._doc_of[: n - m + 1])
         cand = np.zeros(self.n_docs, dtype=bool)
-        m = len(phrase)
-        for i in np.flatnonzero(matched >= need):
-            toks = self.doc_tokens(i)
-            cand[i] = any(toks[j : j + m] == phrase for j in range(len(toks) - m + 1))
+        cand[self._doc_of[: n - m + 1][at]] = True
         return self._top(scores, cand, k), dict(zip(self.doc_ids[cand].tolist(), scores[cand].tolist()))
 
     def prefix_terms(self, prefix: str) -> list[str]:
@@ -108,11 +115,20 @@ class Bm25Oracle:
         return out
 
 
+def expect_topk(answer) -> dict:
+    """Compact form of an oracle top-k for the checks: the top-k, and the
+    oracle score of every document that may stand in it (scores tied
+    with the k-th or better)."""
+    top, scores = answer
+    floor = top[-1][1] - SCORE_TOL if top else math.inf
+    return {"top": top, "scores": [[d, s] for d, s in scores.items() if s >= floor]}
+
+
 def check_topk(got: list[tuple[int, float]], want: list[tuple[int, float]], scores: dict) -> str | None:
     """``got`` must be a correct top-k: same length and scores as the
-    oracle's, every returned doc scored as the oracle scores it, and
-    ordered by (score desc, doc_id asc).  Docs may differ only where
-    the oracle's scores tie."""
+    oracle's, every returned doc scored as the oracle scores it
+    (``scores``: doc -> oracle score), and ordered by (score desc,
+    doc_id asc).  Docs may differ only where the oracle's scores tie."""
     if len(got) != len(want):
         return f"{len(got)} hits, oracle has {len(want)}"
     for (gd, gs), (_, ws) in zip(got, want):
@@ -137,17 +153,40 @@ def epoch_s(col: pd.Series) -> np.ndarray:
     return ((t - pd.Timestamp(0, tz="UTC")) // pd.Timedelta(seconds=1)).to_numpy(dtype=np.int64)
 
 
-def expected_distinct(events: pd.DataFrame, bucket_s: int) -> pd.DataFrame:
-    b = events["ts_s"].to_numpy() // bucket_s * bucket_s
-    g = events.assign(time=b).groupby("time")["user"]
-    return pd.DataFrame({"count": g.size(), "distinct": g.nunique()})
+def _buckets(events: pd.DataFrame, bucket_s: int) -> pd.DataFrame:
+    return events.assign(time=events["ts_s"].to_numpy() // bucket_s * bucket_s)
 
 
-def check_distinct(rows: pd.DataFrame, events: pd.DataFrame, bucket_s: int, mode: str) -> tuple[str | None, dict]:
-    """Date facet with a distinct field.  ``mode``: ``hybrid`` (exact
-    unless tipped), ``approx`` (every bucket within 2%) or ``exact``
-    (every bucket exact)."""
-    want = expected_distinct(events, bucket_s)
+def facet_expectations(events: pd.DataFrame) -> dict:
+    """Every expected facet answer, from the events table (``ts_s``,
+    ``user``, ``slice``, ``tokens``), as JSON-ready lists."""
+
+    def distinct(bucket_s: int) -> list:
+        g = _buckets(events, bucket_s).groupby("time")["user"]
+        return [[int(t), int(c), int(d)] for t, c, d in zip(g.size().index, g.size(), g.nunique())]
+
+    sliced = _buckets(events, HOUR).groupby(["time", "slice"]).size()
+    per_doc = events["tokens"].map(lambda ts: sorted(set(ts)))
+    counts = pd.Series([t for ts in per_doc for t in ts]).value_counts()
+    return {
+        "distinct_hour": distinct(HOUR),
+        "distinct_minute": distinct(MINUTE),
+        "sliced": [[int(t), s, int(c)] for (t, s), c in sliced.items()],
+        "terms": {
+            "counts": {t: int(c) for t, c in counts.items()},
+            "total": int(counts.sum()),
+            "missing": int((per_doc.map(len) == 0).sum()),
+        },
+        "term_set": sorted(counts.index),
+    }
+
+
+def check_distinct(rows: pd.DataFrame, want: list, mode: str) -> tuple[str | None, dict]:
+    """Date facet with a distinct field against ``want`` rows (time,
+    count, distinct).  ``mode``: ``hybrid`` (exact unless tipped),
+    ``approx`` (every bucket within 2%) or ``exact`` (every bucket
+    exact)."""
+    want = pd.DataFrame(want, columns=["time", "count", "distinct"]).set_index("time")
     got = rows.assign(time=epoch_s(rows["time"])).set_index("time").sort_index()
     stats = {"buckets": len(got), "tipped": 0, "max_rel_err": 0.0}
     if not got.index.equals(want.index):
@@ -168,14 +207,9 @@ def check_distinct(rows: pd.DataFrame, events: pd.DataFrame, bucket_s: int, mode
     return None, stats
 
 
-def check_sliced(rows: pd.DataFrame, events: pd.DataFrame, bucket_s: int) -> str | None:
-    b = events["ts_s"].to_numpy() // bucket_s * bucket_s
-    want = events.assign(time=b).groupby(["time", "slice"]).size().sort_index()
-    got = (
-        rows.assign(time=epoch_s(rows["time"]))
-        .set_index(["time", "term"])["count"]
-        .sort_index()
-    )
+def check_sliced(rows: pd.DataFrame, want: list) -> str | None:
+    want = pd.DataFrame(want, columns=["time", "term", "count"]).set_index(["time", "term"])["count"]
+    got = rows.assign(time=epoch_s(rows["time"])).set_index(["time", "term"])["count"].sort_index()
     if len(got) != len(want) or not (got.index == want.index).all():
         return f"sliced buckets differ: {len(got)} vs {len(want)} expected"
     if not (got.to_numpy() == want.to_numpy()).all():
@@ -193,17 +227,15 @@ def check_term_list(terms: list[str], truth: set[str], cap: int) -> str | None:
     return None
 
 
-def check_terms_facet(rows: pd.DataFrame, events: pd.DataFrame, size: int) -> str | None:
-    per_doc = events["tokens"].map(lambda ts: sorted(set(ts)))
-    counts = pd.Series([t for ts in per_doc for t in ts]).value_counts()
-    total = int(counts.sum())
-    missing = int((per_doc.map(len) == 0).sum())
+def check_terms_facet(rows: pd.DataFrame, want: dict, size: int) -> str | None:
+    counts, total, missing = want["counts"], want["total"], want["missing"]
     if len(rows) != min(size, len(counts)):
         return f"terms facet returned {len(rows)} entries"
     for term, c in zip(rows["term"], rows["count"]):
         if counts.get(term) != c:
             return f"terms facet count {c} for {term!r}, pandas {counts.get(term)}"
-    if sorted(rows["count"], reverse=True) != sorted(counts.to_numpy()[: len(rows)], reverse=True):
+    top = sorted(counts.values(), reverse=True)[: len(rows)]
+    if sorted(rows["count"], reverse=True) != top:
         return "terms facet entries are not the top counts"
     if list(rows["count"]) != sorted(rows["count"], reverse=True):
         return "terms facet entries not ordered by count"

@@ -7,8 +7,9 @@ Run from the root of a checkout.  One process drives the engine on
 cycles of the workload's seeded closed-loop op mix for at least
 ``--seconds``, checks every answer, and prints one JSON object as its
 last stdout line: the end-to-end metrics with ``--trace 0``, the
-per-layer metrics with ``--trace 1``.  All files go under ``.perfbench_work/`` in the
-checkout.  ``--scale tiny`` is for the benchmark's own tests.
+per-layer metrics with ``--trace 1``.  All files go under
+``.perfbench_work/`` in the checkout.  ``--scale tiny`` is for the
+benchmark's own tests.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import time
 
@@ -32,13 +34,15 @@ def _load_manifest() -> dict:
         return json.load(f)
 
 
-def end_to_end(run, setup_s: float, peak_rss_mb: float) -> dict:
-    lat = run.latencies
+def end_to_end(run, setup_s: float) -> dict:
+    """``latency_geomean_ms``: geometric mean over the mix's op kinds of
+    each kind's median latency; ``ops_per_s``: ops per second of op
+    time."""
+    lat = [x for xs in run.latencies.values() for x in xs]
     return {
         "setup_s": setup_s,
-        "latency_geomean_ms": statistics.geometric_mean(lat) * 1e3,
+        "latency_geomean_ms": statistics.geometric_mean(run.kind_medians().values()) * 1e3,
         "ops_per_s": len(lat) / sum(lat),
-        "peak_rss_mb": peak_rss_mb,
     }
 
 
@@ -80,15 +84,25 @@ def _run(args, manifest: dict, spec: dict, run_dir: str, env: dict) -> int:
     import workloads
     from sysinfo import log
 
-    cfg = spec["scales"][args.scale]
     wl = spec["workloads"][args.workload]
     params = spec["shipped_job_params"]
-    info = {"env": sysinfo.versions(), "driver_mem_mb": env["driver_mem_mb"]}
+    info = {"driver_mem_mb": env["driver_mem_mb"]}
     marks = {"start": T0}
     info["capacity_mops_before"] = sysinfo.capacity_probe(env["cpus"])
     marks["probe"] = time.perf_counter()
 
-    inputs = workloads.make_inputs(os.path.join(WORK, "inputs"), args.seed, args.scale, cfg, args.workload)
+    # inputs and expected answers come from a process of their own, so
+    # the oracles' memory is not in the measured process tree
+    subprocess.run(
+        [sys.executable, os.path.join(HERE, "prepare.py"), "--workload", args.workload, "--seed", str(args.seed),
+         "--scale", args.scale, "--out", os.path.join(WORK, "inputs")],
+        check=True, stdout=subprocess.DEVNULL,
+    )
+    import prepare
+
+    inputs = prepare.input_dir(os.path.join(WORK, "inputs"), args.seed, args.scale, args.workload)
+    with open(os.path.join(inputs, "expect.json")) as f:
+        expect = json.load(f)
     marks["inputs"] = time.perf_counter()
     tracer = spans.Tracer(enabled=bool(args.trace))
     extra = {
@@ -112,7 +126,8 @@ def _run(args, manifest: dict, spec: dict, run_dir: str, env: dict) -> int:
             with tracer.span("session.get_spark") as s:
                 spark = get_spark(app_name=f"perfbench-{args.workload}", extra_conf=extra)
             tracer.attach(spark)
-            run = workloads.Run(spark, tracer, cfg, wl, params, inputs, run_dir, args.seed)
+            info["env"] = sysinfo.versions(spark)
+            run = workloads.Run(spark, tracer, wl, params, inputs, expect, run_dir)
             run.setup_calls["session.get_spark"] = s.wall
             w = workloads.WORKLOADS[args.workload](run)
             log(f"set-up {args.workload} seed={args.seed}")
@@ -131,27 +146,24 @@ def _run(args, manifest: dict, spec: dict, run_dir: str, env: dict) -> int:
     info["phase_s"] = {b: round(marks[b] - marks[a], 2) for a, b in zip(names, names[1:])}
 
     setup_s = sum(run.setup_calls.values())
-    e2e = end_to_end(run, setup_s, rss.peak_mb)
+    e2e = end_to_end(run, setup_s)
     result = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace, "scale": args.scale,
-        "window_s": window, "samples": len(run.latencies), "attempted": run.attempted,
+        "window_s": window, "samples": sum(map(len, run.latencies.values())), "attempted": run.attempted,
         "failed": run.failed, "failures": run.failures[:20], "setup_calls": run.setup_calls,
-        "latency_ms_by_kind": {
-            k[len("latency."):]: [round(v * 1e3, 1) for v in vs]
-            for k, vs in run.layer.items() if k.startswith("latency.")
-        },
-        "end_to_end": e2e, **info,
+        "latency_ms_by_kind": {k: [round(v * 1e3, 1) for v in vs] for k, vs in run.latencies.items()},
+        "end_to_end": e2e, "peak_rss_mb": rss.peak_mb, **info,
     }
     if args.trace:
         import layers
 
         jobs = spans.read_event_log(log_dir)
-        metrics = layers.per_layer(run, tracer.spans, jobs)
+        metrics = layers.per_layer(run, tracer.spans, jobs, rss.peak_mb)
         result["per_layer"] = metrics
-        result["overhead"] = layers.overhead(os.path.join(WORK, "results"), args.workload, e2e)
+        result["overhead"] = layers.overhead(os.path.join(WORK, "results"), args.workload, args.scale, e2e)
         print(layers.table(metrics, result["overhead"]))
         os.makedirs(os.path.join(WORK, "results"), exist_ok=True)
-        tracer.dump(os.path.join(WORK, "results", f"spans-{args.workload}-s{args.seed}.json"))
+        tracer.dump(os.path.join(WORK, "results", f"spans-{args.workload}-{args.scale}-s{args.seed}.json"))
         units = {m["name"]: m["unit"] for m in manifest["per_layer"]}
     else:
         metrics = e2e
@@ -190,7 +202,7 @@ def _stop(spark) -> None:
 def _save(result: dict) -> None:
     d = os.path.join(WORK, "results")
     os.makedirs(d, exist_ok=True)
-    name = f"{result['workload']}-s{result['seed']}-t{result['trace']}-{int(time.time())}.json"
+    name = f"{result['workload']}-{result['scale']}-s{result['seed']}-t{result['trace']}-{int(time.time())}.json"
     with open(os.path.join(d, name), "w") as f:
         json.dump(result, f, indent=1, default=str)
 

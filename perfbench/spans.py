@@ -96,7 +96,6 @@ class Job:
     tasks: int = 0
     stages_run: set = field(default_factory=set)
     cpu_s: float = 0.0
-    run_s: float = 0.0
     max_task_s: float = 0.0
     sched_delay_s: float = 0.0
     shuffle_write_b: int = 0
@@ -150,7 +149,6 @@ def read_event_log(log_dir: str) -> list[Job]:
                     j.tasks += 1
                     j.stages_run.add(ev["Stage ID"])
                     j.cpu_s += m.get("Executor CPU Time", 0) / 1e9
-                    j.run_s += run
                     j.max_task_s = max(j.max_task_s, dur)
                     j.sched_delay_s += max(0.0, dur - run - overhead)
                     sw = m.get("Shuffle Write Metrics") or {}

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import platform
-import subprocess
 import sys
 import threading
 import time
@@ -34,8 +33,7 @@ def pin_environment(work: str) -> dict:
     are small; a capped heap also keeps the peak RSS from following GC
     timing).  Every temporary file goes under ``work``; JVM perf-data
     files, which HotSpot always writes under /tmp, are turned off for
-    every JVM started from here (the Spark launcher, the driver,
-    ``java -version``)."""
+    every JVM started from here (the Spark launcher and the driver)."""
     cpus = len(os.sched_getaffinity(0))
     heap_mb = max(1024, min(2048, mem_total_mb() // 8))
     tmp = os.path.join(work, "tmp")
@@ -54,24 +52,19 @@ def pin_environment(work: str) -> dict:
     return {"cpus": cpus, "driver_mem_mb": heap_mb, "tmp": tmp}
 
 
-def versions() -> dict:
+def versions(spark) -> dict:
     import numpy
     import pandas
     import pyarrow
     import pyspark
 
-    java = [
-        line for line in subprocess.run(
-            ["java", "-version"], capture_output=True, text=True, timeout=60
-        ).stderr.splitlines()
-        if " version " in line
-    ]
+    system = spark.sparkContext._jvm.java.lang.System
     return {
         "nproc": len(os.sched_getaffinity(0)),
         "mem_total_mb": mem_total_mb(),
         "python": platform.python_version(),
         "spark": pyspark.__version__,
-        "java": java[0] if java else "unknown",
+        "java": f"{system.getProperty('java.vm.name')} {system.getProperty('java.version')}",
         "numpy": numpy.__version__,
         "pandas": pandas.__version__,
         "pyarrow": pyarrow.__version__,

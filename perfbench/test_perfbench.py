@@ -20,6 +20,7 @@ import pytest
 import gen
 import layers
 import oracle
+import prepare
 import run as bench
 import workloads
 from spans import Tracer
@@ -40,16 +41,21 @@ def _spec() -> dict:
 # -- inputs ---------------------------------------------------------------
 
 
+def _read(d: str, sub: str) -> bytes:
+    with open(os.path.join(d, sub), "rb") as f:
+        return f.read()
+
+
 def test_same_seed_gives_identical_inputs(tmp_path):
-    cfg = _spec()["scales"]["tiny"]
-    a = workloads.make_inputs(str(tmp_path / "a"), 5, "tiny", cfg, "search")
-    b = workloads.make_inputs(str(tmp_path / "b"), 5, "tiny", cfg, "search")
-    c = workloads.make_inputs(str(tmp_path / "c"), 6, "tiny", cfg, "search")
-    for sub in ("corpus/part-000.parquet", "corpus_tokens.parquet"):
-        assert open(os.path.join(a, sub), "rb").read() == open(os.path.join(b, sub), "rb").read()
-        assert open(os.path.join(a, sub), "rb").read() != open(os.path.join(c, sub), "rb").read()
-    assert gen.make_events(5, cfg["events"]).equals(gen.make_events(5, cfg["events"]))
-    assert not gen.make_events(5, cfg["events"]).equals(gen.make_events(6, cfg["events"]))
+    files = {
+        "search": ["corpus/part-000.parquet", "delta/part-000.parquet", "doc_tokens.parquet", "expect.json"],
+        "facets": ["events/part-000.parquet", "expect.json"],
+    }
+    for workload, subs in files.items():
+        a, b, c = (prepare.prepare(str(tmp_path / x), seed, "tiny", workload) for x, seed in (("a", 5), ("b", 5), ("c", 6)))
+        for sub in subs:
+            assert _read(a, sub) == _read(b, sub)
+            assert _read(a, sub) != _read(c, sub)
 
 
 def test_corpus_tokens_are_what_the_code_tokenizer_returns():
@@ -65,8 +71,7 @@ def test_corpus_tokens_are_what_the_code_tokenizer_returns():
 
 def _run_stub() -> workloads.Run:
     spec = _spec()
-    return workloads.Run(None, Tracer(False), spec["scales"]["tiny"], spec["workloads"]["search"],
-                         spec["shipped_job_params"], "", "", 1)
+    return workloads.Run(None, Tracer(False), spec["workloads"]["search"], spec["shipped_job_params"], "", {}, "")
 
 
 def test_tampered_score_fails_and_counts_as_failed():
@@ -84,7 +89,16 @@ def test_tampered_score_fails_and_counts_as_failed():
     r.op("match", lambda: tampered, lambda got: oracle.check_topk(got, top, scores))
     r.op("match", lambda: 1 / 0, lambda got: None)
     assert (r.attempted, r.failed) == (3, 2)
-    assert len(r.latencies) == 2
+    assert len(r.latencies["match"]) == 2
+
+
+def test_phrase_oracle_matches_adjacent_terms_within_one_doc():
+    docs = [["a", "b", "c"], ["b", "a", "x"], ["c", "a"], ["b", "c", "a", "b"]]
+    orc = oracle.Bm25Oracle(np.array([1, 2, 3, 4]), docs)
+    top, scores = orc.phrase_topk(["a", "b"], 10)
+    assert sorted(d for d, _ in top) == [1, 4]  # doc 3 ends in "a", doc 4 starts with "b"
+    assert set(scores) == {1, 4}
+    assert orc.phrase_topk(["b", "zz"], 10)[0] == []
 
 
 def _events() -> pd.DataFrame:
@@ -98,32 +112,29 @@ def _events() -> pd.DataFrame:
 
 
 def test_tampered_facet_count_fails_and_counts_as_failed():
-    ev = _events()
-    want = oracle.expected_distinct(ev, 3600)
+    want = oracle.facet_expectations(_events())
+    hours = pd.DataFrame(want["distinct_hour"], columns=["time", "count", "distinct"])
     rows = pd.DataFrame({
-        "time": pd.to_datetime(want.index, unit="s"), "count": want["count"].to_numpy(),
-        "distinct_count": want["distinct"].to_numpy(), "tipped": False,
+        "time": pd.to_datetime(hours["time"], unit="s"), "count": hours["count"],
+        "distinct_count": hours["distinct"], "tipped": False,
     })
-    assert oracle.check_distinct(rows, ev, 3600, "hybrid")[0] is None
+    assert oracle.check_distinct(rows, want["distinct_hour"], "hybrid")[0] is None
     bad = rows.assign(count=rows["count"] + [0, 1, 0])
-    assert oracle.check_distinct(bad, ev, 3600, "hybrid")[0] is not None
+    assert oracle.check_distinct(bad, want["distinct_hour"], "hybrid")[0] is not None
     off = rows.assign(distinct_count=rows["distinct_count"] * 2, tipped=True)
-    assert oracle.check_distinct(off, ev, 3600, "hybrid")[0] is not None
+    assert oracle.check_distinct(off, want["distinct_hour"], "hybrid")[0] is not None
 
-    sliced = ev.assign(time=ev["ts_s"] // 3600 * 3600).groupby(["time", "slice"]).size()
-    srows = pd.DataFrame({
-        "time": pd.to_datetime(sliced.index.get_level_values(0), unit="s"),
-        "term": sliced.index.get_level_values(1), "count": sliced.to_numpy(),
-    })
-    assert oracle.check_sliced(srows, ev, 3600) is None
-    assert oracle.check_sliced(srows.assign(count=srows["count"] + 1), ev, 3600) is not None
+    sl = pd.DataFrame(want["sliced"], columns=["time", "term", "count"])
+    srows = sl.assign(time=pd.to_datetime(sl["time"], unit="s"))
+    assert oracle.check_sliced(srows, want["sliced"]) is None
+    assert oracle.check_sliced(srows.assign(count=srows["count"] + 1), want["sliced"]) is not None
 
     terms = pd.DataFrame({"term": ["x", "y"], "count": [4, 3], "total": 8, "other": 1, "missing": 0})
-    assert oracle.check_terms_facet(terms, ev, 2) is None
-    assert oracle.check_terms_facet(terms.assign(count=[4, 2]), ev, 2) is not None
+    assert oracle.check_terms_facet(terms, want["terms"], 2) is None
+    assert oracle.check_terms_facet(terms.assign(count=[4, 2]), want["terms"], 2) is not None
 
     r = _run_stub()
-    r.op("hybrid", lambda: bad, lambda got: oracle.check_distinct(got, ev, 3600, "hybrid")[0])
+    r.op("hybrid", lambda: bad, lambda got: oracle.check_distinct(got, want["distinct_hour"], "hybrid")[0])
     assert (r.attempted, r.failed) == (1, 1)
 
 
@@ -137,7 +148,7 @@ def test_manifest_matches_the_code():
     m, spec = _manifest(), _spec()
     assert set(m) == {"command", "paths", "run_seconds", "workloads", "end_to_end", "per_layer"}
     assert [w["name"] for w in m["workloads"]] == list(spec["workloads"])
-    assert [e["name"] for e in m["end_to_end"]] == list(bench.end_to_end(_run_with_latency(), 1.0, 1.0))
+    assert [e["name"] for e in m["end_to_end"]] == list(bench.end_to_end(_run_with_latency(), 1.0))
     assert {p["name"]: (p["unit"], p["better"]) for p in m["per_layer"]} == {
         k: (u, b) for k, (u, b, _, _) in layers.METRICS.items()
     }
@@ -150,7 +161,7 @@ def test_manifest_matches_the_code():
 
 def _run_with_latency() -> workloads.Run:
     r = _run_stub()
-    r.latencies = [0.1, 0.2]
+    r.latencies = {"match": [0.1], "bool": [0.2]}
     return r
 
 

@@ -1,59 +1,22 @@
-"""The two workloads: set-up, seeded operation schedule, the ops
-themselves and their checks.
+"""The two workloads: set-up, the closed loop over the prepared request
+schedule, the ops themselves and their checks.
 
 Every call into the program is timed from outside, inside a span of the
 tracer (``spans.py``).  Set-up time counts only the program's own calls
-(session, index build/write/reopen/warm); generating inputs and
-preparing oracles is the benchmark's work and is excluded.
+(session, index build/write/append/reopen/warm); generating inputs and
+computing expected answers is the benchmark's work, done beforehand in
+a process of its own (``prepare.py``).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import statistics
 import time
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-import gen
 import oracle
 from sysinfo import log
-
-# -- inputs ---------------------------------------------------------------
-
-
-def _write_parts(table: pa.Table, path: str, n_parts: int) -> None:
-    os.makedirs(path, exist_ok=True)
-    step = -(-table.num_rows // n_parts)
-    for i in range(n_parts):
-        gen.write_parquet(table.slice(i * step, step), os.path.join(path, f"part-{i:03d}.parquet"))
-
-
-def make_inputs(root: str, seed: int, scale: str, cfg: dict, workload: str) -> str:
-    """Generate (or reuse) the raw inputs for ``workload``; returns their
-    directory.  Inputs are keyed by generator version, scale and seed."""
-    d = os.path.join(root, f"g{gen.GEN_VERSION}-{scale}-s{seed}")
-    done = os.path.join(d, f"_DONE_{workload}")
-    if os.path.exists(done):
-        return d
-    os.makedirs(d, exist_ok=True)
-    if workload == "search":
-        c = cfg["corpus"]
-        t = gen.make_corpus(seed, 0, 0, c["n_files"], c)
-        shutil.rmtree(os.path.join(d, "corpus"), ignore_errors=True)
-        _write_parts(t.drop_columns(["tokens"]), os.path.join(d, "corpus"), c["n_parquet_files"])
-        gen.write_parquet(t.select(["file_id", "tokens"]), os.path.join(d, "corpus_tokens.parquet"))
-    else:
-        e = cfg["events"]
-        shutil.rmtree(os.path.join(d, "events"), ignore_errors=True)
-        _write_parts(gen.make_events(seed, e), os.path.join(d, "events"), e["n_parquet_files"])
-    open(done, "w").close()
-    return d
-
 
 # -- run context ----------------------------------------------------------
 
@@ -61,13 +24,12 @@ def make_inputs(root: str, seed: int, scale: str, cfg: dict, workload: str) -> s
 class Run:
     """State of one benchmark run: session, tracer, timings, counters."""
 
-    def __init__(self, spark, tracer, cfg: dict, wl: dict, params: dict, inputs: str, scratch: str, seed: int):
+    def __init__(self, spark, tracer, wl: dict, params: dict, inputs: str, expect: dict, scratch: str):
         self.spark, self.tracer = spark, tracer
-        self.cfg, self.wl, self.params = cfg, wl, params
-        self.inputs, self.scratch, self.seed = inputs, scratch, seed
-        self.rng = np.random.default_rng([seed, gen.GEN_VERSION, 7])
+        self.wl, self.params = wl, params
+        self.inputs, self.expect, self.scratch = inputs, expect, scratch
         self.setup_calls: dict[str, float] = {}
-        self.latencies: list[float] = []
+        self.latencies: dict[str, list[float]] = {}  # by op kind
         self.attempted = 0
         self.failed = 0
         self.failures: list[str] = []
@@ -97,23 +59,26 @@ class Run:
         try:
             with self.tracer.span("request", request=self.attempted + 1, kind=kind) as s:
                 result = fn()
-            self.latencies.append(s.wall)
-            self.note(f"latency.{kind}", s.wall)
+            self.latencies.setdefault(kind, []).append(s.wall)
             reason = check(result)
         except Exception as exc:  # one failed request must not end the run
             reason = f"{type(exc).__name__}: {exc}"
         self.check(kind, reason)
 
     def loop(self, seconds: float, ops: dict) -> float:
-        """Run whole cycles of the seeded op mix until ``seconds`` have
-        passed (at least one); whole cycles keep the mix's proportions
-        fixed."""
-        t0 = time.perf_counter()
+        """Run whole cycles of the op mix until ``seconds`` have passed
+        (at least one); whole cycles keep the mix's proportions fixed.
+        ``ops[kind]`` takes the cycle number."""
+        t0, c = time.perf_counter(), 0
         while True:
             for kind in self.wl["cycle"]:
-                ops[kind]()
+                ops[kind](c)
+            c += 1
             if time.perf_counter() - t0 >= seconds:
                 return time.perf_counter() - t0
+
+    def kind_medians(self) -> dict[str, float]:
+        return {k: statistics.median(v) for k, v in self.latencies.items()}
 
 
 # -- search ---------------------------------------------------------------
@@ -122,135 +87,75 @@ class Run:
 class SearchWorkload:
     def __init__(self, run: Run):
         self.r = run
-        self.c = run.cfg["corpus"]
+        self.cycles = run.expect["cycles"]
+        self._exhaustive = None
 
-    def setup(self) -> None:
+    def _docs(self, path: str):
+        """The shipped build job's input with ``--id-col file_id``: the
+        sha guard on the read path, then the code tokenizer."""
         from pyspark.sql import functions as F
 
         from elasticsearch_approx_plugin_spark.functions.tokenize import tokenize_code
+        from elasticsearch_approx_plugin_spark.sources.corpus import with_sha_enforced
+
+        p = self.r.params
+        corpus = with_sha_enforced(self.r.spark.read.parquet(path))
+        return corpus.select(F.col(p["id_col"]).alias("doc_id"), tokenize_code(p["text_col"]).alias("tokens"))
+
+    def setup(self) -> None:
         from elasticsearch_approx_plugin_spark.operators.bm25 import warm_index
         from elasticsearch_approx_plugin_spark.operators.postings import (
+            append_to_index,
             build_index,
             read_index,
             write_index,
         )
-        from elasticsearch_approx_plugin_spark.sources.corpus import with_sha_enforced
 
         r, p = self.r, self.r.params
-        spark = r.spark
+        spark, want = r.spark, r.expect["ingest"]
         self.index_dir = os.path.join(r.scratch, "index")
-        corpus_dir = os.path.join(r.inputs, "corpus")
 
-        # the shipped build job with --id-col file_id: sha guard on the
-        # read path, code tokenizer, then build_index + write_index
+        # the shipped build job, then its --append with the delta
         with r.tracer.span("ingest.build"):
-            corpus = with_sha_enforced(spark.read.parquet(corpus_dir))
-            docs = corpus.select(
-                F.col(p["id_col"]).alias("doc_id"), tokenize_code(p["text_col"]).alias("tokens")
+            index = r.timed_setup(
+                "postings.build_index", build_index, self._docs(os.path.join(r.inputs, "corpus")),
+                range_bits=p["range_bits"],
             )
-            index = r.timed_setup("postings.build_index", build_index, docs, range_bits=p["range_bits"])
             r.timed_setup("postings.write_index", write_index, index, self.index_dir, n_buckets=p["n_buckets"])
+        r.note("postings.index_mb", _dir_bytes(self.index_dir) / 2**20)
+        r.check("ingest.build", self._check_ingest(index.n_docs, want["build"]))
+        delta = self._docs(os.path.join(r.inputs, "delta"))
+        meta = r.timed_setup("postings.append_to_index", append_to_index, spark, self.index_dir, delta)
+        r.note("postings.append.delta_content_bytes", want["delta_content_bytes"])
+        r.check("ingest.append", self._check_ingest(meta["n_docs"], want["append"]))
+
+        # the query job: reopen the appended snapshot and warm it
         self.index = r.timed_setup("postings.read_index", read_index, spark, self.index_dir)
         r.timed_setup("bm25.warm_index", warm_index, self.index, warm_terms=p["warm_terms"])
-        r.note("postings.index_mb", _dir_bytes(self.index_dir) / 2**20)
-        self._prepare_oracle()
-        r.check("ingest", self.check_ingest())
+        n = self.index.n_docs
+        r.check("ingest.read", None if n == want["append"]["n_docs"] else f"reopened n_docs {n}")
+        self.tokens_df = spark.read.parquet(os.path.join(r.inputs, "doc_tokens.parquet"))
 
-    def _prepare_oracle(self) -> None:
-        """Benchmark-side: the exact oracle, the (doc_id, tokens) table
-        that phrase queries verify against, and the query vocabularies."""
-        r = self.r
-        toks = pq.read_table(os.path.join(r.inputs, "corpus_tokens.parquet"))
-        self.oracle = oracle.Bm25Oracle(
-            toks.column("file_id").to_numpy(), toks.column("tokens").combine_chunks()
-        )
-        tok_path = os.path.join(r.scratch, "doc_tokens.parquet")
-        pq.write_table(toks.rename_columns(["doc_id", "tokens"]), tok_path)
-        self.tokens_df = r.spark.read.parquet(tok_path)
-        # needles: long-tail identifiers outside the warmed term cache
-        # (all of them when the whole dictionary fits the cache)
-        warm = self.oracle.warm_set(r.params["warm_terms"])
-        tail = [t for t in self.oracle.vocab if gen.is_tail_word(t)]
-        self.needles = [t for t in tail if t not in warm] or tail
-        head = gen.head_vocab(self.c["head_vocab"])
-        self.head = head[: r.wl["query_head"]]
-        self.mid = head[r.wl["query_head"] : 4 * r.wl["query_head"]]
-
-    def check_ingest(self) -> str | None:
+    def _check_ingest(self, n_docs: int, want: dict) -> str | None:
         """n_docs and the sum of df (the manifest's per-bucket postings,
         as the build job reports them) must match the input."""
         with open(os.path.join(self.index_dir, "manifest.json")) as f:
-            postings = sum(b["postings"] for b in json.load(f)["buckets"].values())
-        want = self.oracle.n_postings
+            sum_df = sum(b["postings"] for b in json.load(f)["buckets"].values())
         errs = []
-        if self.oracle.n_docs != self.c["n_files"]:
-            errs.append(f"{self.oracle.n_docs} doc ids for {self.c['n_files']} files")
-        if postings != want:
-            errs.append(f"sum(df) {postings} != {want}")
-        if self.index.n_docs != self.oracle.n_docs:
-            errs.append(f"index n_docs {self.index.n_docs} != {self.oracle.n_docs}")
+        if n_docs != want["n_docs"]:
+            errs.append(f"n_docs {n_docs} != {want['n_docs']}")
+        if sum_df != want["sum_df"]:
+            errs.append(f"sum(df) {sum_df} != {want['sum_df']}")
         return "; ".join(errs) or None
 
-    # -- schedule ---------------------------------------------------------
-
-    def _head_terms(self, n: int) -> list[str]:
-        """``n`` distinct Zipf-drawn terms of the query head."""
-        out: list[str] = []
-        while len(out) < n:
-            t = self.head[gen.zipf_ranks(self.r.rng, 1, self.head.size, 1.0)[0]]
-            if t not in out:
-                out.append(t)
-        return out
-
-    def _random_doc(self) -> list[str]:
-        return self.oracle.doc_tokens(int(self.r.rng.integers(0, self.oracle.n_docs)))
-
     def ops(self) -> dict:
-        wl, k = self.r.wl, self.r.params["k"]
+        def request(kind):
+            return lambda c: self._search(kind, self.cycles[c % len(self.cycles)][kind])
 
-        def match():
-            terms = self._head_terms(wl["match_terms"])
-            self._search("match", {"query": {"match": {"content": " ".join(terms)}}},
-                         terms, lambda: self.oracle.topk(terms, k))
-
-        def boolq():
-            terms = self._head_terms(wl["bool_terms"])
-            m = wl["bool_minimum_should_match"]
-            body = {"query": {"bool": {"should": [{"term": {"content": t}} for t in terms],
-                                       "minimum_should_match": m}}}
-            self._search("bool", body, terms, lambda: self.oracle.topk(terms, k, msm=m))
-
-        def needle():
-            term = self.needles[int(self.r.rng.integers(0, len(self.needles)))]
-            self._search("needle", {"query": {"match": {"content": term}}},
-                         [term], lambda: self.oracle.topk([term], k))
-
-        def phrase():
-            while True:  # a bigram of two head terms
-                doc = self._random_doc()
-                j = int(self.r.rng.integers(0, len(doc) - 1))
-                ph = doc[j : j + 2]
-                if not any(map(gen.is_tail_word, ph)):
-                    break
-            self._search("match_phrase", {"query": {"match_phrase": {"content": " ".join(ph)}}},
-                         ph, lambda: self.oracle.phrase_topk(ph, k))
-
-        def prefix():
-            word = self.mid[int(self.r.rng.integers(0, self.mid.size))]
-            pfx = word[: wl["prefix_len"]]
-            self._search("prefix", {"query": {"prefix": {"content": pfx}}},
-                         [], lambda: self.oracle.topk(self.oracle.prefix_terms(pfx), k))
-
-        def batch():
-            qs = [(i, self._head_terms(wl["match_terms"])) for i in range(wl["batch_queries"])]
-            self._batch_queries, self._exhaustive = qs, None
-            self._batch(qs, prune=False)
-
-        def batch_wand():
-            self._batch(self._batch_queries, prune=True)
-
-        return {"match": match, "bool": boolq, "needle": needle, "match_phrase": phrase,
-                "prefix": prefix, "batch": batch, "batch_wand": batch_wand}
+        ops = {kind: request(kind) for kind in ("match", "bool", "needle", "match_phrase", "prefix")}
+        ops["batch"] = lambda c: self._batch(self.cycles[c % len(self.cycles)]["batch"], prune=False)
+        ops["batch_wand"] = lambda c: self._batch(self.cycles[c % len(self.cycles)]["batch"], prune=True)
+        return ops
 
     # -- ops --------------------------------------------------------------
 
@@ -260,15 +165,15 @@ class SearchWorkload:
             self.r.note("bm25.term_lookups", len(set(terms)))
             self.r.note("bm25.term_misses", miss)
 
-    def _search(self, kind: str, body: dict, terms: list[str], want) -> None:
+    def _search(self, kind: str, req: dict) -> None:
         from elasticsearch_approx_plugin_spark.plans.search import search_topk
 
         r = self.r
 
         def call():
-            self._cache_miss(terms)
+            self._cache_miss(req["terms"])
             with r.tracer.span("search.search_topk") as s:
-                df = search_topk(self.index, {**body, "size": r.params["k"]}, tokens=self.tokens_df)
+                df = search_topk(self.index, {**req["body"], "size": r.params["k"]}, tokens=self.tokens_df)
             r.note("search.search_topk_call_ms", s.wall * 1e3)
             with r.tracer.span("search.collect") as s:
                 rows = df.collect()
@@ -277,19 +182,21 @@ class SearchWorkload:
 
         def check(rows):
             got = [(int(x["doc_id"]), float(x["score"])) for x in sorted(rows, key=lambda x: x["rank"])]
-            top, scores = want()
-            return oracle.check_topk(got, top, scores)
+            return _check_topk(got, req)
 
         r.op(kind, call, check)
 
-    def _batch(self, qs, prune: bool) -> None:
+    def _batch(self, req: dict, prune: bool) -> None:
         from elasticsearch_approx_plugin_spark.operators.bm25 import score_queries
 
         r = self.r
         kind = "batch_wand" if prune else "batch"
         layer = "bm25.wand" if prune else "bm25.batch"
+        qs = [(qid, terms) for qid, terms in req["queries"]]
 
         def call():
+            if not prune:
+                self._exhaustive = None
             self._cache_miss([t for _, ts in qs for t in ts])
             stats = {} if (prune and r.tracer.enabled) else None
             with r.tracer.span("bm25.score_queries", prune=prune) as s:
@@ -304,16 +211,15 @@ class SearchWorkload:
             return rows
 
         def check(rows):
-            got = {}
+            got: dict[int, list] = {}
             for x in sorted(rows, key=lambda x: (x["query_id"], x["rank"])):
                 got.setdefault(int(x["query_id"]), []).append((int(x["doc_id"]), float(x["score"])))
             if not prune:
                 self._exhaustive = got
-            elif self._exhaustive is not None and got != self._exhaustive:
+            elif got != self._exhaustive:
                 return "WAND results differ from the exhaustive batch"
-            for qid, terms in qs:
-                top, scores = self.oracle.topk(terms, r.params["k"])
-                reason = oracle.check_topk(got.get(qid, []), top, scores)
+            for (qid, _), want in zip(qs, req["want"]):
+                reason = _check_topk(got.get(qid, []), want)
                 if reason:
                     return f"query {qid}: {reason}"
             return None
@@ -321,14 +227,17 @@ class SearchWorkload:
         r.op(kind, call, check)
 
 
-# -- facets ---------------------------------------------------------------
+def _check_topk(got: list, want: dict) -> str | None:
+    return oracle.check_topk(got, [tuple(x) for x in want["top"]], {d: s for d, s in want["scores"]})
 
-HOUR, MINUTE = 3600, 60
+
+# -- facets ---------------------------------------------------------------
 
 
 class FacetsWorkload:
     def __init__(self, run: Run):
         self.r = run
+        self.term_set = set(run.expect["term_set"])
 
     def _bodies(self) -> dict:
         wl = self.r.wl
@@ -343,16 +252,9 @@ class FacetsWorkload:
         }
 
     def setup(self) -> None:
-        r = self.r
-        path = os.path.join(r.inputs, "events")
-        self.df = r.spark.read.parquet(path)
-        ev = pq.read_table(path).to_pandas()
-        ev["ts_s"] = oracle.epoch_s(ev["ts"])
-        ev["tokens"] = ev["tokens"].map(list)
-        self.events = ev
-        self.truth_terms = {t for ts in ev["tokens"] for t in ts}
+        self.df = self.r.spark.read.parquet(os.path.join(self.r.inputs, "events"))
 
-    def _request(self, kind: str) -> pd.DataFrame:
+    def _request(self, kind: str):
         from elasticsearch_approx_plugin_spark.plans.request_parser import parse_request
 
         r = self.r
@@ -363,30 +265,29 @@ class FacetsWorkload:
         with r.tracer.span("facet_query.run", kind=kind) as s:
             df = spec.run(self.df)
         r.note("facet_query.run_call_ms", s.wall * 1e3)
-        with r.tracer.span("facet.collect", kind=kind) as s:
-            rows = df.toPandas()
-        r.note(f"facet.collect_ms.{kind}", s.wall * 1e3)
-        return rows
+        with r.tracer.span("facet.collect", kind=kind):
+            return df.toPandas()
 
-    def _check(self, kind: str, rows: pd.DataFrame) -> str | None:
-        wl, ev = self.r.wl, self.events
+    def _check(self, kind: str, rows) -> str | None:
+        wl, want = self.r.wl, self.r.expect
         if kind in ("hybrid", "approx", "exact_minute"):
             mode = {"hybrid": "hybrid", "approx": "approx", "exact_minute": "exact"}[kind]
-            reason, st = oracle.check_distinct(rows, ev, MINUTE if kind == "exact_minute" else HOUR, mode)
+            table = want["distinct_minute" if kind == "exact_minute" else "distinct_hour"]
+            reason, st = oracle.check_distinct(rows, table, mode)
             if kind != "exact_minute":
                 self.r.note("distinct_count.max_rel_err", st["max_rel_err"])
             if kind == "hybrid":
                 self.r.note("distinct_count.tipped_bucket_share", st["tipped"] / max(st["buckets"], 1))
             return reason
         if kind == "sliced":
-            return oracle.check_sliced(rows, ev, HOUR)
+            return oracle.check_sliced(rows, want["sliced"])
         if kind == "term_list":
-            return oracle.check_term_list(rows["term"].tolist(), self.truth_terms, wl["term_list_max_per_shard"])
-        return oracle.check_terms_facet(rows, ev, wl["terms_size"])
+            return oracle.check_term_list(rows["term"].tolist(), self.term_set, wl["term_list_max_per_shard"])
+        return oracle.check_terms_facet(rows, want["terms"], wl["terms_size"])
 
     def ops(self) -> dict:
         def make(kind):
-            return lambda: self.r.op(kind, lambda: self._request(kind), lambda rows: self._check(kind, rows))
+            return lambda c: self.r.op(kind, lambda: self._request(kind), lambda rows: self._check(kind, rows))
 
         return {kind: make(kind) for kind in self.r.wl["cycle"]}
 
