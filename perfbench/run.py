@@ -18,6 +18,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -65,9 +66,13 @@ def main(argv: list[str] | None = None) -> int:
         ap.error(f"unknown workload {args.workload!r}")
     import sysinfo
 
+    # every process started from here is stopped and waited for before
+    # this one exits, also on an error or a SIGTERM
+    sysinfo.adopt_orphans()
+    signal.signal(signal.SIGTERM, _exit_on_signal)
     run_dir = os.path.join(WORK, "runs", f"{args.workload}-s{args.seed}-t{args.trace}-{os.getpid()}")
-    env = sysinfo.pin_environment(run_dir)
     try:
+        env = sysinfo.pin_environment(run_dir)
         try:
             import elasticsearch_approx_plugin_spark  # noqa: F401
         except ImportError as exc:
@@ -75,7 +80,12 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         return _run(args, manifest, spec, run_dir, env)
     finally:
+        sysinfo.end_descendants()
         shutil.rmtree(run_dir, ignore_errors=True)
+
+
+def _exit_on_signal(signum, frame) -> None:
+    raise SystemExit(128 + signum)
 
 
 def _run(args, manifest: dict, spec: dict, run_dir: str, env: dict) -> int:
@@ -133,6 +143,7 @@ def _run(args, manifest: dict, spec: dict, run_dir: str, env: dict) -> int:
             log(f"set-up {args.workload} seed={args.seed}")
             w.setup()
             marks["setup"] = time.perf_counter()
+            _settle(spark)
             log("measuring")
             window = run.loop(args.seconds, w.ops())
             marks["window"] = time.perf_counter()
@@ -179,6 +190,16 @@ def _run(args, manifest: dict, spec: dict, run_dir: str, env: dict) -> int:
     return 0
 
 
+def _settle(spark) -> None:
+    """Collect the set-up's garbage in the JVM and in this process
+    before the window opens, so that no run's requests pay for a
+    collection the set-up left behind and others' do not."""
+    import gc
+
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
+
 def _stop(spark) -> None:
     """Stop the session and wait for the JVM (and its Python workers)
     to exit."""
@@ -186,9 +207,14 @@ def _stop(spark) -> None:
 
     gateway = SparkContext._gateway
     proc = getattr(gateway, "proc", None)
-    spark.stop()
-    if gateway is not None:
-        gateway.shutdown()
+    try:
+        spark.stop()
+        if gateway is not None:
+            gateway.shutdown()
+    except Exception as exc:  # a signal may have cut a gateway call short
+        sys.stderr.write(f"perfbench: stopping the session: {exc}\n")
+        if proc is not None:
+            proc.kill()
     if proc is not None:
         if proc.stdin:
             proc.stdin.close()

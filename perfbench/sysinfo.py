@@ -1,5 +1,5 @@
-"""Environment pinning, the raw-CPU capacity probe and the process-tree
-memory sampler.
+"""Environment pinning, the raw-CPU capacity probe, the process-tree
+memory sampler and the clean-up of every process a run starts.
 
 None of these is a metric of the program: the environment and the
 probe readings are recorded next to each result so that a reading
@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import os
 import platform
+import signal
+import subprocess
 import sys
 import threading
 import time
@@ -79,24 +81,47 @@ def _burn(n_iter: int) -> int:
     return x
 
 
+_BURNER = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from sysinfo import _burn
+_burn(1000)
+print("ready", flush=True)
+sys.stdin.readline()
+_burn(int(sys.argv[2]))
+print("done", flush=True)
+"""
+
+
 def capacity_probe(procs: int, n_iter: int = 500_000) -> float:
     """Raw-CPU capacity in M ops/s: the same LCG burn ``bench.py`` uses,
-    one worker per core.  Readings well below this machine's usual ones
-    mean the machine, not the code, was slow."""
-    import multiprocessing as mp
-
-    ctx = mp.get_context("spawn")
-    with ctx.Pool(procs) as pool:
-        pool.map(_burn, [1000] * procs)  # start the workers first
+    one process per core, all released at once once each has started.
+    Readings well below this machine's usual ones mean the machine, not
+    the code, was slow.  Plain child processes, each waited for, so the
+    probe leaves nothing running (a multiprocessing pool would leave its
+    resource tracker alive until this process exits)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    cmd = [sys.executable, "-c", _BURNER, here, str(n_iter)]
+    kids = [subprocess.Popen(cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True) for _ in range(procs)]
+    try:
+        for k in kids:
+            k.stdout.readline()
         t0 = time.perf_counter()
-        pool.map(_burn, [n_iter] * procs)
+        for k in kids:
+            k.stdin.write("go\n")
+            k.stdin.flush()
+        for k in kids:
+            k.stdout.readline()
         dt = time.perf_counter() - t0
-        pool.close()
-        pool.join()
+    finally:
+        for k in kids:
+            k.kill()
+            k.wait()
     return round(procs * n_iter / dt / 1e6, 2)
 
 
-def _tree_rss_kb(root: int) -> int:
+def _proc_table() -> tuple[dict[int, list[int]], dict[int, int]]:
+    """Children of every process and each process's RSS in kB."""
     children: dict[int, list[int]] = {}
     rss: dict[int, int] = {}
     for name in os.listdir("/proc"):
@@ -110,12 +135,75 @@ def _tree_rss_kb(root: int) -> int:
         pid = int(name)
         children.setdefault(int(fields[1]), []).append(pid)
         rss[pid] = int(fields[21]) * (os.sysconf("SC_PAGE_SIZE") // 1024)
+    return children, rss
+
+
+def descendants(root: int) -> list[int]:
+    children, _ = _proc_table()
+    out, stack = [], list(children.get(root, ()))
+    while stack:
+        pid = stack.pop()
+        out.append(pid)
+        stack.extend(children.get(pid, ()))
+    return out
+
+
+def _tree_rss_kb(root: int) -> int:
+    children, rss = _proc_table()
     total, stack = 0, [root]
     while stack:
         pid = stack.pop()
         total += rss.get(pid, 0)
         stack.extend(children.get(pid, ()))
     return total
+
+
+def adopt_orphans() -> None:
+    """Make this process the child subreaper of everything it starts:
+    a process whose parent exits first (a Python worker of the Spark
+    daemon, say) is re-parented here instead of to init, so
+    :func:`end_descendants` can still find it and wait for it."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass
+
+
+def _reap() -> None:
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def end_descendants(grace: float = 10.0) -> None:
+    """Stop every process this one started, directly or not, and wait
+    until each has ended: SIGTERM, then SIGKILL after ``grace`` s."""
+    me = os.getpid()
+    deadline = time.monotonic() + grace
+    termed: set[int] = set()
+    while True:
+        _reap()
+        pids = descendants(me)
+        if not pids:
+            if termed:
+                log(f"stopped {len(termed)} leftover process(es)")
+            return
+        late = time.monotonic() > deadline
+        for pid in pids:
+            if late or pid not in termed:
+                try:
+                    os.kill(pid, signal.SIGKILL if late else signal.SIGTERM)
+                except ProcessLookupError:
+                    pass
+                termed.add(pid)
+        time.sleep(0.05)
 
 
 class RssSampler:

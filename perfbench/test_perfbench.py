@@ -159,6 +159,26 @@ def test_manifest_matches_the_code():
     assert all(len(w["why"]) <= 200 and "\n" not in w["why"] for w in m["workloads"])
 
 
+_ORPHAN = """
+import os, subprocess
+import sysinfo
+sysinfo.adopt_orphans()
+subprocess.run(["sleep 300 & echo $!"], shell=True, stdout=open("pid", "w"))
+sysinfo.capacity_probe(2, n_iter=1000)
+assert sysinfo.descendants(os.getpid()), "the orphan was not adopted"
+sysinfo.end_descendants()
+assert not sysinfo.descendants(os.getpid())
+"""
+
+
+def test_no_process_outlives_the_run(tmp_path):
+    out = subprocess.run([sys.executable, "-c", _ORPHAN], cwd=tmp_path, capture_output=True, text=True,
+                         timeout=60, env={**os.environ, "PYTHONPATH": os.path.join(REPO, "perfbench")})
+    assert out.returncode == 0, out.stderr
+    pid = int((tmp_path / "pid").read_text())
+    assert not os.path.exists(f"/proc/{pid}")
+
+
 def _run_with_latency() -> workloads.Run:
     r = _run_stub()
     r.latencies = {"match": [0.1], "bool": [0.2]}
